@@ -40,9 +40,6 @@ from bigdata_invoice_stream_analysis_spark.streaming.app import (
 )
 from bigdata_invoice_stream_analysis_spark.streaming.sources import file_lines_source
 
-FEATURE_COLS = [
-    "AvgUnitPrice", "MinUnitPrice", "MaxUnitPrice", "Time", "NumberItems",
-]
 CENTERS = [
     [3000.0, 1000.0, 8000.0, 12.0, 100.0],
     [15000.0, 5000.0, 40000.0, 12.0, 120.0],
@@ -67,14 +64,12 @@ def drain(spark, sf_dir: str, n_chunks: int = 8) -> dict:
         cfg = PipelineConfig(
             sink_mode="parquet",
             out_dir=out,
-            time_mode="event",
             watermark="10 minutes",
             available_now=True,
             models={
                 "kmeans": ModelSpec(centers=CENTERS, threshold=4.0e9),
                 "bisecting": ModelSpec(centers=CENTERS, threshold=4.0e9),
             },
-            feature_cols=FEATURE_COLS,
         )
         stream = file_lines_source(
             spark, src, max_files_per_trigger=max(1, n_chunks // 4)

@@ -1235,9 +1235,6 @@ def _stage_bucketed_text(
     )
 
 
-# Shared by streaming_full_pipeline (4 independent queries) and
-# streaming_full_pipeline_router (3 queries, anomaly fan-out router):
-# both topologies must produce row-identical sink contents.
 FULL_PIPELINE_ORACLE = f"""
 WITH {PURCHASE_CTE}, {LINES_CTE},
 wm AS (
@@ -1312,59 +1309,16 @@ def q_streaming_full_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         exactly once with complete features — the deterministic
         composition contract.
 
-    Scale notes: four queries share the source scan per micro-batch
-    only in foreachBatch-router deployments (sinks.py docstring); this
-    gate deliberately runs the reference's 4-independent-queries
+    Scale notes: this is the reference's 4-independent-queries
     topology, where each query tracks its own offsets — the shape that
     lets one slow sink lag without backpressuring the rest. State: the
     window aggs hold O(open windows), the feature agg O(open invoices),
     both watermark/update bounded; scoring is plan-literal codegen."""
-    from bigdata_invoice_stream_analysis_spark.streaming.app import run_pipeline
-
-    return _run_full_pipeline_gate(
-        spark, sf_dir, run_pipeline, "full_pipe", n_queries=4
-    )
-
-
-@query("streaming_full_pipeline_router", oracle=FULL_PIPELINE_ORACLE)
-def q_streaming_full_pipeline_router(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The SHARED-SCAN twin of streaming_full_pipeline:
-    streaming/app.py::run_pipeline_router collapses the two anomaly
-    sinks into ONE streaming query — the per-invoice feature
-    aggregation (the expensive stateful stage) runs once per
-    micro-batch instead of once per model, and a foreachBatch router
-    scores the batch against both centroid models and fans out through
-    the idempotent batch_id-overwrite writer (all sinks replay
-    together, so the multi-sink write is batch-transactional). 3
-    source scans + 1 feature-agg state store per micro-batch vs the
-    4-query topology's 4 + 2 — the arithmetic that dominates at 100 TB
-    (PERF.md compares the two plans). Same staged event-time-ordered
-    buckets, same oracle, row-identical output: the gate IS the proof
-    of output equivalence between the two deployment shapes."""
-    from bigdata_invoice_stream_analysis_spark.streaming.app import (
-        run_pipeline_router,
-    )
-
-    return _run_full_pipeline_gate(
-        spark, sf_dir, run_pipeline_router, "full_pipe_router", n_queries=3
-    )
-
-
-def _run_full_pipeline_gate(
-    spark: SparkSession, sf_dir: str, runner, prefix: str, n_queries: int
-) -> DataFrame:
-    """Shared drain/read/flatten body for the two full-pipeline
-    topology gates: stage event-time-ordered line buckets, run the
-    topology under ``runner`` (run_pipeline or run_pipeline_router)
-    with parquet sinks + fresh checkpoints, then flatten all four sink
-    outputs into one (sink, k1, k2, n) relation for the shared
-    oracle."""
     from bigdata_invoice_stream_analysis_spark.scratch import fresh_checkpoint
     from bigdata_invoice_stream_analysis_spark.streaming.app import (
         ModelSpec,
         PipelineConfig,
+        run_pipeline,
     )
     from bigdata_invoice_stream_analysis_spark.streaming.sources import (
         file_lines_source,
@@ -1393,10 +1347,10 @@ def _run_full_pipeline_gate(
     staged = _stage_bucketed_text(
         spark,
         ln.select(bkt.cast("int").alias("bkt"), "value"),
-        prefix,
+        "full_pipe",
     )
     lines = file_lines_source(spark, staged, max_files_per_trigger=1)
-    out_dir = fresh_checkpoint(f"{prefix}_out_")
+    out_dir = fresh_checkpoint("full_pipe_out_")
     cfg = PipelineConfig(
         sink_mode="parquet",
         out_dir=out_dir,
@@ -1408,31 +1362,28 @@ def _run_full_pipeline_gate(
     )
     # _run_drain's state-partition sizing, inlined: run_pipeline starts
     # its own queries, so the conf must wrap the whole topology. The
-    # topology runs its queries CONCURRENTLY, so each query owns
-    # cores/n_queries (passed explicitly by the two gate wrappers —
-    # r10 ADVICE: the old `"router" in prefix` substring inference
-    # silently mis-divided for any new caller). r9 sized each query's
-    # share as a PYTHON-state gate (owned cores), but every stateful
-    # stage in this topology is a JVM aggregation (legacy_state=False →
-    # invoice_updates is a groupBy agg; the cancellation window is a
-    # JVM window agg; scoring is stateless codegen), and the r9 driver
-    # scaling block showed the tell: 0.68/0.71 low/high ratios — the
-    # 8-core run BEAT the 32-core run because 8 parts/query × 4
-    # queries over-provisioned JVM state stores. JVM-gate sizing
-    # (owned/4, floor 2) applies; before/after numbers in
-    # OPTIMIZATION_r10.md.
+    # topology runs its four queries CONCURRENTLY, so each query owns
+    # cores/4. r9 sized each query's share as a PYTHON-state gate
+    # (owned cores), but every stateful stage in this topology is a JVM
+    # aggregation (invoice_updates is a groupBy agg; the cancellation
+    # window is a JVM window agg; scoring is stateless codegen), and the
+    # r9 driver scaling block showed the tell: 0.68/0.71 low/high
+    # ratios — the 8-core run BEAT the 32-core run because 8
+    # parts/query × 4 queries over-provisioned JVM state stores.
+    # JVM-gate sizing (owned/4, floor 2) applies; before/after numbers
+    # in OPTIMIZATION_r10.md.
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set(
         "spark.sql.shuffle.partitions",
         str(
             _drain_state_partitions(
-                spark, python_state=False, concurrent=n_queries
+                spark, python_state=False, concurrent=4
             )
         ),
     )
     queries = []
     try:
-        queries = runner(lines, cfg)
+        queries = run_pipeline(lines, cfg)
         for q_ in queries:
             if not q_.awaitTermination(300):
                 raise TimeoutError(

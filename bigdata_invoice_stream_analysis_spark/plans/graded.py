@@ -2,7 +2,7 @@
 
 Composition of the round-10 window (50 slots):
 
-  * 23 CHANGED-CODE RE-PINS (changed code is graded the round it
+  * 22 CHANGED-CODE RE-PINS (changed code is graded the round it
     changes; fingerprints regenerated against the r9-HEAD baseline
     with the NEW alias-aware closure, so only rows whose closure
     CONTENT actually changed this round re-pin — the algorithm change
@@ -22,15 +22,18 @@ Composition of the round-10 window (50 slots):
         content-triage pair via the sniff→hls closure);
       - the 5 Python keyed-state gates (staging trim:
         prepared_purchase_lines pre-filters + direct ts derivation);
-      - the 2 full-pipeline twins (topology sizing python_state →
-        JVM rule; explicit n_queries).
+      - streaming_full_pipeline (topology sizing python_state → JVM
+        rule). Its shared-scan twin streaming_full_pipeline_router
+        held a slot here until the foreachBatch router topology was
+        deleted (app.run_pipeline is the only topology builder); its
+        slot went to the next backfill row.
   * 11 DEFERRED_REPINS due this round (tiers.py r9 amendment — the
     12th, split_contamination_bloom, is already in the changed set).
-  * 16 OLDEST-FIRST STABLE BACKFILL — r04-cohort rows (newest grade
-    r04, stable deadline r12); 16 of the remaining 18 go now, the
-    last 2 (temporal_split_audit, zorder_layout_profile) in r11,
-    still a round ahead of their bound.
-  23 + 11 + 16 = 50, exactly. No row is tier-stale this round
+  * 17 OLDEST-FIRST STABLE BACKFILL — r04-cohort rows (newest grade
+    r04, stable deadline r12); 17 of the remaining 18 go now, the
+    last one (zorder_layout_profile) in r11, still a round ahead of
+    its bound.
+  22 + 11 + 17 = 50, exactly. No row is tier-stale this round
   (fast newest ≥ r8; stable newest ≥ r4) and none is never-graded.
 
 Previous round's composition below for the historical record.
@@ -169,7 +172,6 @@ GRADED_50: list[str] = [
     "streaming_content_triage",
     "streaming_custom_state",
     "streaming_full_pipeline",
-    "streaming_full_pipeline_router",
     "streaming_pii_monitor",
     "streaming_state_list_map",
     "streaming_state_timers",
@@ -204,6 +206,7 @@ GRADED_50: list[str] = [
     "status_priority_grouping_sets",
     "streaming_hll_users",
     "streaming_value_percentiles",
+    "temporal_split_audit",
 ]
 
 # Round-9 window, kept verbatim for the historical record (the module

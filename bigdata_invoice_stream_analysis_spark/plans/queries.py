@@ -1629,7 +1629,6 @@ DRAIN_GATES: frozenset[str] = frozenset({
     "streaming_error_purchase_join",
     "streaming_error_windows",
     "streaming_full_pipeline",
-    "streaming_full_pipeline_router",
     "streaming_heavy_hitters",
     "streaming_hll_users",
     "streaming_pii_monitor",

@@ -110,7 +110,6 @@ FAST_PINS: frozenset[str] = frozenset({
     "topk_threshold",
     "centroid_anomalies",
     "streaming_full_pipeline",
-    "streaming_full_pipeline_router",
     "invalid_lines",
     "route_counts",
     "cancelled_invoices",

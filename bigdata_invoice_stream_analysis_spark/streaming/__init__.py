@@ -14,6 +14,7 @@ Modules:
   pipeline  — declarative branch builders (P1-P4, W1, A3/A4)
   state     — applyInPandasWithState legacy-exact keyed state (W2/A4)
   scoring   — stream-safe centroid scoring (M3/M4, pure column math)
-  sinks     — Kafka / parquet / memory sinks + foreachBatch router (S4/W4/W6)
+  sinks     — Kafka / parquet / memory / idempotent foreachBatch sinks
+              (S4/W4/W6), one query + checkpoint per output
   producer  — replay producer simulator (S7)
 """

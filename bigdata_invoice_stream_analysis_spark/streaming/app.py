@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from bigdata_invoice_stream_analysis_spark.streaming import pipeline as P
-from bigdata_invoice_stream_analysis_spark.streaming import scoring, sinks, state
+from bigdata_invoice_stream_analysis_spark.streaming import scoring, sinks
 
 TOPIC_INVALID = "facturas_erroneas"  # IP:27
 TOPIC_CANCELLATIONS = "cancelaciones"  # IP:28
@@ -49,15 +49,9 @@ class PipelineConfig:
     sink_mode: str = "parquet"  # kafka | parquet | memory
     out_dir: str = "./out"  # parquet sink root / checkpoint root
     brokers: str | None = None  # kafka mode
-    time_mode: str = "event"  # event | processing (reference-faithful)
-    window: str = P.DEFAULT_WINDOW
-    slide: str = P.DEFAULT_SLIDE
     watermark: str = P.DEFAULT_WATERMARK
-    legacy_state: bool = False  # True → applyInPandasWithState W2 exact
-    weighted_avg: bool = True
     available_now: bool = False  # drain-and-stop (tests/golden runs)
     models: dict[str, ModelSpec] = field(default_factory=dict)
-    feature_cols: list[str] | None = None
 
 
 def _start(
@@ -108,134 +102,22 @@ def run_pipeline(lines: DataFrame, cfg: PipelineConfig) -> list[StreamingQuery]:
         )
         queries.append(
             _start(
-                P.cancellation_counts(
-                    lines, window=cfg.window, slide=cfg.slide,
-                    watermark=cfg.watermark, time_mode=cfg.time_mode,
-                ),
+                P.cancellation_counts(lines, watermark=cfg.watermark),
                 TOPIC_CANCELLATIONS, cfg, "append",
             )
         )
 
-        purchases = P.good_purchases(lines, time_mode=cfg.time_mode)
-        if cfg.legacy_state:
-            updates = state.apply_invoice_state(purchases)
-        else:
-            updates = P.invoice_updates(purchases, weighted_avg=cfg.weighted_avg)
-
+        updates = P.invoice_updates(P.good_purchases(lines))
         topic_by_model = {
             "kmeans": TOPIC_ANOMALIES_KMEANS,
             "bisecting": TOPIC_ANOMALIES_BISECT,
         }
         for model_name, spec in cfg.models.items():
             flagged = scoring.anomalies_with_centroids(
-                updates, spec.centers, spec.threshold, cfg.feature_cols
+                updates, spec.centers, spec.threshold
             )
             topic = topic_by_model.get(model_name, f"anomalias_{model_name}")
             queries.append(_start(flagged, topic, cfg, "update"))
-    except Exception:
-        for q in queries:
-            try:
-                q.stop()
-            except Exception:
-                pass  # best-effort cleanup; the wiring error propagates
-        raise
-    return queries
-
-
-def _model_router(
-    updates: DataFrame, specs: list[tuple[str, ModelSpec]], cfg: PipelineConfig
-) -> StreamingQuery:
-    """ONE streaming query carrying BOTH anomaly sinks: the stateful
-    per-invoice feature aggregation runs once, and a foreachBatch
-    router scores each micro-batch against every model and fans out
-    transactionally (idempotent batch_id overwrite per sink — a replay
-    rewrites every sink's partition, so the multi-sink write is
-    all-or-nothing at the batch level). This is the shape a 100 TB
-    deployment prefers over per-model queries: one source scan and ONE
-    feature-agg state store per micro-batch instead of one per model
-    (the run_pipeline topology keeps per-sink offsets instead — the
-    trade is isolation vs duplicated scan+state; PERF.md compares)."""
-    if cfg.sink_mode not in ("parquet", "kafka"):
-        # Validate at WIRING time: raising inside the foreachBatch
-        # callback would start all queries successfully and fail
-        # asynchronously on batch 0, bypassing run_pipeline_router's
-        # stop-survivors cleanup.
-        raise ValueError(
-            "the foreachBatch router needs an idempotent batch sink; "
-            f"sink_mode {cfg.sink_mode!r} is not"
-        )
-
-    def route(bdf: DataFrame, bid: int) -> None:
-        bdf.persist()
-        try:
-            for topic, spec in specs:
-                flagged = scoring.anomalies_with_centroids(
-                    bdf, spec.centers, spec.threshold, cfg.feature_cols
-                )
-                if cfg.sink_mode == "parquet":
-                    sinks.overwrite_batch(flagged, bid, f"{cfg.out_dir}/{topic}")
-                else:  # "kafka" — the only other mode wiring admits
-                    (
-                        sinks.to_kafka_records(flagged, key_col=flagged.columns[0])
-                        .write.format("kafka")
-                        .option("kafka.bootstrap.servers", cfg.brokers)
-                        .option("topic", topic)
-                        .save()
-                    )
-        finally:
-            bdf.unpersist()
-
-    return sinks.foreach_batch_collector(
-        updates,
-        route,
-        output_mode="update",
-        checkpoint=f"{cfg.out_dir}/_checkpoints/anomalias_router",
-        trigger_available_now=cfg.available_now,
-    )
-
-
-def run_pipeline_router(
-    lines: DataFrame, cfg: PipelineConfig
-) -> list[StreamingQuery]:
-    """run_pipeline's shared-scan twin: the stateless invalid-line sink
-    and the windowed cancellation sink keep their own queries (their
-    state machines are distinct), but the N anomaly sinks collapse into
-    ONE query via the foreachBatch model router — N+2 source scans and
-    N feature-agg state stores become 3 scans and 1 store for the
-    reference's 4-sink deployment. Output is row-identical to
-    run_pipeline (the streaming_full_pipeline_router gate pins both
-    against one oracle)."""
-    queries: list[StreamingQuery] = []
-    try:
-        queries.append(
-            _start(P.invalid_lines(lines), TOPIC_INVALID, cfg, "append")
-        )
-        queries.append(
-            _start(
-                P.cancellation_counts(
-                    lines, window=cfg.window, slide=cfg.slide,
-                    watermark=cfg.watermark, time_mode=cfg.time_mode,
-                ),
-                TOPIC_CANCELLATIONS, cfg, "append",
-            )
-        )
-        if cfg.models:
-            purchases = P.good_purchases(lines, time_mode=cfg.time_mode)
-            if cfg.legacy_state:
-                updates = state.apply_invoice_state(purchases)
-            else:
-                updates = P.invoice_updates(
-                    purchases, weighted_avg=cfg.weighted_avg
-                )
-            topic_by_model = {
-                "kmeans": TOPIC_ANOMALIES_KMEANS,
-                "bisecting": TOPIC_ANOMALIES_BISECT,
-            }
-            specs = [
-                (topic_by_model.get(m, f"anomalias_{m}"), spec)
-                for m, spec in cfg.models.items()
-            ]
-            queries.append(_model_router(updates, specs, cfg))
     except Exception:
         for q in queries:
             try:

@@ -57,18 +57,15 @@ def cancellation_counts(
     slide: str = DEFAULT_SLIDE,
     watermark: str = DEFAULT_WATERMARK,
     time_mode: str = "event",
-    exact: bool = True,
 ) -> DataFrame:
     """Branch 2 (P2 + A2 + A3 + W1): count of distinct cancelled
     invoices per sliding window (reduceByKeyAndWindow with inverse
     reduce, InvoicePipeline.scala:65-80).
 
-    exact=True chains two stateful aggs — dedup on (window, InvoiceNo)
-    then count per window — supported since Spark 3.4 with a watermark;
-    state for both levels is purged as the watermark advances, unlike
-    the reference whose manual inverse-reduce kept every key resident.
-    exact=False uses one agg with approx_count_distinct — half the
-    shuffle state, the right trade at very high cardinality.
+    Two chained stateful aggs — dedup on (window, InvoiceNo) then count
+    per window — supported since Spark 3.4 with a watermark; state for
+    both levels is purged as the watermark advances, unlike the
+    reference whose manual inverse-reduce kept every key resident.
     Output: window_start, window_end, n_cancelled (append mode).
     """
     # Watermark BEFORE the cancelled filter: the event-time high-water
@@ -92,17 +89,12 @@ def cancellation_counts(
         .select(F.col("key").alias("InvoiceNo"), "ts")
     )
     w = F.window("ts", window, slide)
-    if exact:
-        per_invoice = cancelled.groupBy(w.alias("window"), "InvoiceNo").agg(
-            F.count(F.lit(1)).alias("n_lines")
-        )
-        counts = per_invoice.groupBy("window").agg(
-            F.count(F.lit(1)).alias("n_cancelled")
-        )
-    else:
-        counts = cancelled.groupBy(w.alias("window")).agg(
-            F.approx_count_distinct("InvoiceNo").alias("n_cancelled")
-        )
+    per_invoice = cancelled.groupBy(w.alias("window"), "InvoiceNo").agg(
+        F.count(F.lit(1)).alias("n_lines")
+    )
+    counts = per_invoice.groupBy("window").agg(
+        F.count(F.lit(1)).alias("n_cancelled")
+    )
     return counts.select(
         F.col("window.start").alias("window_start"),
         F.col("window.end").alias("window_end"),
@@ -246,11 +238,7 @@ def cancellation_matches(
     )
 
 
-def invoice_updates(
-    purchases: DataFrame,
-    watermark: str | None = None,
-    weighted_avg: bool = True,
-) -> DataFrame:
+def invoice_updates(purchases: DataFrame) -> DataFrame:
     """A4 as a plain streaming aggregation (update output mode): the
     running per-invoice feature row, recomputed incrementally by the
     state store — only keys touched by a micro-batch are emitted.
@@ -261,10 +249,10 @@ def invoice_updates(
     against every 20 s batch, InvoicePipeline.scala:136 — O(all keys)
     per batch).
 
-    weighted_avg=True is the reference's streaming recurrence
-    (InvoicePipeline.scala:110: quantity-weighted running mean); False
-    matches batch-training row-mean semantics — the train/serve-skew
-    flag (SURVEY.md §3.1), default chosen to match serving.
+    AvgUnitPrice is the reference's streaming recurrence
+    (InvoicePipeline.scala:110: quantity-weighted running mean); batch
+    training uses the row mean instead — the train/serve-skew flag
+    (SURVEY.md §3.1, operators.featurize.aggregate_invoices).
 
     Time semantics: mean fractional hour over all of the invoice's
     lines (the reference stored the hour of the *latest batch's head
@@ -272,16 +260,10 @@ def invoice_updates(
     """
     from bigdata_invoice_stream_analysis_spark.functions.time_fns import fractional_hour
 
-    if watermark:
-        purchases = purchases.withWatermark("ts", watermark)
-    if weighted_avg:
-        avg_price = (
-            F.sum(F.col("UnitPrice") * F.col("Quantity")) / F.sum("Quantity")
-        ).alias("AvgUnitPrice")
-    else:
-        avg_price = F.avg("UnitPrice").alias("AvgUnitPrice")
     return purchases.groupBy("InvoiceNo").agg(
-        avg_price,
+        (
+            F.sum(F.col("UnitPrice") * F.col("Quantity")) / F.sum("Quantity")
+        ).alias("AvgUnitPrice"),
         F.min("UnitPrice").alias("MinUnitPrice"),
         F.max("UnitPrice").alias("MaxUnitPrice"),
         F.avg(fractional_hour(F.col("ts"))).alias("Time"),

@@ -1,11 +1,10 @@
-"""Streaming sinks + the foreachBatch router (S4, W4, W6).
+"""Streaming sinks (S4, W4, W6).
 
 The reference hand-rolls a per-partition KafkaProducer per micro-batch
 (InvoicePipeline.scala:156-172 — unpooled, fire-and-forget). The rebuild
 uses the built-in Kafka sink (pooled producers, offset-tracked,
-checkpointed ⇒ at-least-once with replayable offsets) or, for the
-4-topic fan-out, ONE foreachBatch router so the source is read once per
-micro-batch instead of once per sink query.
+checkpointed ⇒ at-least-once with replayable offsets), one query and
+one checkpoint per output topic.
 
 W6 stringification: the reference emits Scala's ``Invoice(...)``
 toString as the Kafka value; the rebuild emits JSON (``to_json`` over a
@@ -183,7 +182,7 @@ def foreach_batch_collector(
     trigger_available_now: bool = False,
 ) -> StreamingQuery:
     """W4 — foreachBatch with a caller-supplied (batch_df, batch_id)
-    callback; the router used by tests and multi-sink deployments. The
+    callback (tests collect micro-batches through it). The
     reference's empty-RDD guard (InvoicePipeline.scala:62) is implicit:
     empty micro-batches still invoke the callback but write nothing."""
     writer = df.writeStream.foreachBatch(collect).outputMode(output_mode)
@@ -198,21 +197,16 @@ def overwrite_batch(bdf: DataFrame, bid: int, path: str) -> None:
     """The idempotent micro-batch write primitive: land the batch in
     ``batch_id=N/`` with dynamic partition overwrite, so a replayed
     batch (crash between sink write and checkpoint commit) overwrites
-    its own previous attempt instead of appending duplicates. Used by
-    idempotent_parquet_sink and by foreachBatch routers that fan one
-    batch out to several sinks transactionally."""
-    spark = bdf.sparkSession
-    old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            bdf.withColumn("batch_id", F.lit(bid))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", old)
+    its own previous attempt instead of appending duplicates. The
+    overwrite mode is a per-write option, so the session conf
+    ``spark.sql.sources.partitionOverwriteMode`` is left untouched."""
+    (
+        bdf.withColumn("batch_id", F.lit(bid))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id")
+        .parquet(path)
+    )
 
 
 def idempotent_parquet_sink(

@@ -48,7 +48,6 @@ def test_run_pipeline_parquet_sinks(spark, tmp_path):
     cfg = PipelineConfig(
         sink_mode="parquet",
         out_dir=out,
-        time_mode="event",
         watermark="1 minute",
         available_now=True,
         models={
@@ -59,9 +58,6 @@ def test_run_pipeline_parquet_sinks(spark, tmp_path):
                 centers=[[10.0, 9.5, 11.0, 10.0, 3.0]], threshold=1000.0
             ),
         },
-        feature_cols=[
-            "AvgUnitPrice", "MinUnitPrice", "MaxUnitPrice", "Time", "NumberItems",
-        ],
     )
     lines = file_lines_source(spark, str(src), max_files_per_trigger=1)
     queries = run_pipeline(lines, cfg)
@@ -85,72 +81,29 @@ def test_run_pipeline_parquet_sinks(spark, tmp_path):
     assert "I9" in {r.InvoiceNo for r in bi.collect()}
 
 
-def test_run_pipeline_router_matches_four_query_topology(spark, tmp_path):
-    """run_pipeline_router collapses the two anomaly sinks into ONE
-    foreachBatch-router query (3 queries total) and must produce
-    row-identical sink contents to run_pipeline's 4-query topology."""
-    from bigdata_invoice_stream_analysis_spark.streaming.app import (
-        run_pipeline_router,
-    )
-
+@pytest.mark.parametrize(
+    "bad",
+    [
+        {"sink_mode": "kafka"},  # kafka without brokers
+        {"sink_mode": "no-such-sink"},  # unknown sink mode
+    ],
+    ids=["kafka-without-brokers", "unknown-sink-mode"],
+)
+def test_run_pipeline_rejects_bad_sink_config_at_wiring(spark, tmp_path, bad):
+    """A bad sink config fails when the topology is wired — not
+    asynchronously on batch 0 — and leaves no query running."""
     src = tmp_path / "in"
-    raw = tmp_path / "raw.csv"
-    raw.write_text("\n".join(LINES) + "\n")
-    replay_to_dir(str(raw), str(src), chunk=4)
-    cfg_kw = dict(
-        sink_mode="parquet",
-        time_mode="event",
-        watermark="1 minute",
-        available_now=True,
-        models={
-            "kmeans": ModelSpec(
-                centers=[[10.0, 9.5, 11.0, 10.0, 3.0]], threshold=1000.0
-            ),
-            "bisecting": ModelSpec(
-                centers=[[10.0, 9.5, 11.0, 10.0, 3.0]], threshold=1000.0
-            ),
-        },
-        feature_cols=[
-            "AvgUnitPrice", "MinUnitPrice", "MaxUnitPrice", "Time", "NumberItems",
-        ],
-    )
+    src.mkdir()
     lines = file_lines_source(spark, str(src), max_files_per_trigger=1)
-    out_a = str(tmp_path / "out_four")
-    qa = run_pipeline(lines, PipelineConfig(out_dir=out_a, **cfg_kw))
-    assert len(qa) == 4
-    out_b = str(tmp_path / "out_router")
-    qb = run_pipeline_router(lines, PipelineConfig(out_dir=out_b, **cfg_kw))
-    assert len(qb) == 3  # invalid + cancellations + ONE anomaly router
-    for q in (*qa, *qb):
-        q.awaitTermination(120)
-
-    for sink in (
-        "facturas_erroneas",
-        "cancelaciones",
-        "anomalias_kmeans",
-        "anomalias_bisect_kmeans",
-    ):
-        a = spark.read.parquet(f"{out_a}/{sink}").drop("batch_id")
-        b = spark.read.parquet(f"{out_b}/{sink}").drop("batch_id")
-        assert sorted(a.columns) == sorted(b.columns), sink
-        ra = sorted(map(tuple, a.select(*sorted(a.columns)).collect()))
-        rb = sorted(map(tuple, b.select(*sorted(a.columns)).collect()))
-        assert ra == rb, f"{sink}: topologies disagree"
-    # the router landed the outlier in both model sinks
-    km = spark.read.parquet(f"{out_b}/anomalias_kmeans")
-    assert "I9" in {r.InvoiceNo for r in km.collect()}
-
-    # unsupported sink modes fail at WIRING time (no half-started
-    # topology failing asynchronously on batch 0)
-    with pytest.raises(ValueError, match="idempotent batch sink"):
-        run_pipeline_router(
-            lines,
-            PipelineConfig(
-                out_dir=str(tmp_path / "out_bad"),
-                **{**cfg_kw, "sink_mode": "memory"},
-            ),
-        )
-    assert not (tmp_path / "out_bad" / "anomalias_kmeans").exists()
+    cfg = PipelineConfig(
+        out_dir=str(tmp_path / "out"),
+        available_now=True,
+        models={"kmeans": ModelSpec(centers=[[0.0] * 5], threshold=1.0)},
+        **bad,
+    )
+    with pytest.raises(ValueError):
+        run_pipeline(lines, cfg)
+    assert spark.streams.active == []
 
 
 def test_train_all_cli(spark, tmp_path):

@@ -183,7 +183,7 @@ def test_invoice_updates_match_batch(spark, stream_dir):
     """Train/serve consistency: the streaming update-mode aggregation's
     final state equals the batch aggregation over the same lines."""
     lines = file_lines_source(spark, stream_dir, max_files_per_trigger=1)
-    updates = P.invoice_updates(P.good_purchases(lines), weighted_avg=True)
+    updates = P.invoice_updates(P.good_purchases(lines))
     batches = run_collect(spark, updates, output_mode="update")
     final = {}
     for _, rows in batches:
@@ -197,9 +197,7 @@ def test_invoice_updates_match_batch(spark, stream_dir):
     )
     expected = {
         r.InvoiceNo: r
-        for r in P.invoice_updates(
-            P.good_purchases(batch_lines), weighted_avg=True
-        ).collect()
+        for r in P.invoice_updates(P.good_purchases(batch_lines)).collect()
     }
     assert set(final) == set(expected) == {"I1", "I2", "I5"}
     for k in expected:
@@ -244,7 +242,7 @@ def test_stream_anomaly_scoring(spark, stream_dir):
     exactly the far-from-centroid invoices."""
     centers = [[2.0, 2.0, 2.0, 10.0, 5.0], [20.0, 10.0, 30.0, 10.0, 4.0]]
     lines = file_lines_source(spark, stream_dir, max_files_per_trigger=1)
-    updates = P.invoice_updates(P.good_purchases(lines), weighted_avg=True)
+    updates = P.invoice_updates(P.good_purchases(lines))
     flagged = scoring.anomalies_with_centroids(updates, centers, threshold=9.0)
     batches = run_collect(spark, flagged, output_mode="update")
     got = {r.InvoiceNo for _, rows in batches for r in rows}
@@ -421,16 +419,14 @@ def test_idempotent_sink_exactly_once(spark, stream_dir, tmp_path):
     first = spark.read.parquet(out)
     n1 = first.count()
     assert n1 == 5
-    # Simulate a crash-replay of batch 0: rerun the SAME batch write.
+    # Simulate a crash-replay of batch 0: rerun the SAME batch write
+    # through the sink's own write primitive.
     replay = first.filter(F.col("batch_id") == 0).drop("batch_id")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        replay.withColumn("batch_id", F.lit(0)).write.mode("overwrite").partitionBy(
-            "batch_id"
-        ).parquet(out)
-    finally:
-        spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+    conf = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(conf)
+    sinks.overwrite_batch(replay, 0, out)
     assert spark.read.parquet(out).count() == n1, "replay must not duplicate"
+    assert spark.conf.get(conf) == before, "session conf must be untouched"
 
 
 def test_late_data_dropped_after_watermark(spark, tmp_path):

@@ -355,92 +355,42 @@ def rocksdb_provider(spark: SparkSession):
             spark.conf.set(key, prev)
 
 
-def _drive_until_drained(
-    spark: SparkSession, writer, drained, what: str,
-    partitions: int | None = None,
-):
-    """Start ``writer`` on an UNBOUNDED trigger and stop it from the
-    driver once the sink signals ``drained``. ProcessingTime timeMode
-    (required for TTL state and timers) keeps scheduling empty
-    timer-evaluation micro-batches, so an availableNow drain NEVER
-    terminates (measured: 167+ empty batches in 90 s) — driver-side
-    stop is the only clean drain. Propagates streaming-query
-    exceptions; times out after 300 s. Shuffle partitions are
-    right-sized around the run exactly as _run_drain does (one state
-    store per shuffle partition per micro-batch)."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    n = partitions or _drain_state_partitions(spark)
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        q = writer.start()
-        try:
-            for _ in range(600):
-                if drained.wait(0.5):
-                    break
-                if q.exception() is not None:
-                    raise q.exception()
-            else:
-                raise TimeoutError(
-                    f"{what} drain did not consume all staged files in 300s"
-                )
-        finally:
-            q.stop()
-            q.awaitTermination(60)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-
 def run_custom_state_drain(
     spark: SparkSession,
     p: DataFrame,
-    transform=None,
+    transform,
     prefix: str = "custom_state",
     stop_after_files: bool = False,
-) -> dict[str, tuple[float, float, float, int]]:
+) -> dict[str, tuple]:
     """Stage bucketed purchase lines into 3 single-file parquet buckets
-    and drain a keyed-state ``transform`` (default:
-    ``apply_invoice_state``; the state-v2 gate passes
-    ``transform_invoice_state``) over them with ``maxFilesPerTrigger=1``
-    (up to 3 genuine micro-batches carrying Arrow state). Returns the
-    final per-invoice state snapshot (last-emission-wins). ONE body
-    shared by the v1 gate, the v2 gate, the TTL gate, and the scaling
-    probe's drain-cost tiers — a staging fix lands everywhere at once.
+    and drain a keyed-state ``transform`` over them with
+    ``maxFilesPerTrigger=1`` (up to 3 genuine micro-batches carrying
+    Arrow state). Returns the last-emission-wins snapshot of the
+    transform's output as {first column: tuple(remaining columns)} —
+    callers project the transform down to the columns they hash. ONE
+    body shared by the five keyed-state gates, the state tests and the
+    scaling probe's drain-cost tiers — a staging or stop-rule fix lands
+    everywhere at once.
 
     Staged files get strictly increasing mtimes so the FileStreamSource
     picks buckets 0→1→2 deterministically (the v1/v2 gates' hashed
     columns are fold-order-independent so they never cared; the TTL
-    gate's surviving-window oracle does).
+    and list-state gates' oracles do).
 
     ``stop_after_files``: timeMode="ProcessingTime" (required for TTL
-    state) keeps scheduling timer-evaluation micro-batches, so an
-    availableNow drain NEVER terminates (measured: 167+ empty batches
-    in 90 s). With this flag the drain instead runs an unbounded
-    trigger and is stopped from the driver once every staged file has
-    been consumed (batch id ≥ n_files−1 AND ≥ n_files batches emitted
-    rows — timer batches emit nothing, data batches over the staged
-    volume always emit)."""
+    state and timers) keeps scheduling timer-evaluation micro-batches,
+    so an availableNow drain NEVER terminates (measured: 167+ empty
+    batches in 90 s). With this flag the drain instead runs an
+    unbounded trigger and is stopped from the driver once every staged
+    file has been consumed (batch id ≥ n_files−1 AND ≥ n_files batches
+    emitted rows — timer batches emit nothing, data batches over the
+    staged volume always emit); it propagates streaming-query
+    exceptions and times out after 300 s."""
     import threading
 
-    from bigdata_invoice_stream_analysis_spark.deploy import (
-        ensure_package_on_workers,
-    )
-    from bigdata_invoice_stream_analysis_spark.streaming.state import (
-        apply_invoice_state,
-    )
-
-    # The v1 updater closure references module-level helpers
-    # (_fold_batch/_emit_row), which cloudpickle serializes BY NAME —
-    # workers must be able to import the package regardless of the
-    # driver's cwd (measured: the gate run in ISOLATION from a foreign
-    # cwd failed with ModuleNotFoundError; in full sweeps an earlier
-    # media gate happened to ship the zip — an order dependency this
-    # call removes).
-    ensure_package_on_workers(spark)
-    transform = transform or apply_invoice_state
     n_files = 3
     stream = _stage_bucketed_stream(spark, p, prefix, n_files)
-    scored = transform(stream)
-    acc: dict[str, tuple[float, float, float, int]] = {}
+    acc: dict[str, tuple] = {}
     drained = threading.Event()
     data_batches = [0]
 
@@ -453,78 +403,84 @@ def run_custom_state_drain(
         pdf = bdf.toPandas()
         if len(pdf):
             data_batches[0] += 1
-        for inv, mn, mx, ni, ln in zip(
-            pdf["InvoiceNo"],
-            pdf["MinUnitPrice"],
-            pdf["MaxUnitPrice"],
-            pdf["NumberItems"],
-            pdf["Lines"],
-        ):
-            acc[inv] = (float(mn), float(mx), float(ni), int(ln))
+        for row in pdf.itertuples(index=False, name=None):
+            acc[row[0]] = row[1:]
         if bid >= n_files - 1 and data_batches[0] >= n_files:
             drained.set()
 
-    ckpt = fresh_checkpoint(f"stream_{prefix}_ckpt_")
     writer = (
-        scored.writeStream.outputMode("update")
+        transform(stream).writeStream.outputMode("update")
         .foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
+        .option("checkpointLocation", fresh_checkpoint(f"stream_{prefix}_ckpt_"))
     )
     # Python keyed-state gates size to owned cores, not the JVM-gate
     # default: their bottleneck is per-group Python processing
     # (measured 6.9 s at 32 partitions vs 12.5 s at 8 on this drain).
     n_parts = _drain_state_partitions(spark, python_state=True)
-    if stop_after_files:
-        _drive_until_drained(spark, writer, drained, "TTL", partitions=n_parts)
-    else:
-        _run_drain(
-            spark, writer.trigger(availableNow=True), partitions=n_parts
-        )
+    if not stop_after_files:
+        _run_drain(spark, writer.trigger(availableNow=True), partitions=n_parts)
+        return acc
+    # Unbounded trigger, stopped from the driver; shuffle partitions are
+    # right-sized around the run exactly as _run_drain does (one state
+    # store per shuffle partition per micro-batch).
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
+    try:
+        q = writer.start()
+        try:
+            for _ in range(600):
+                if drained.wait(0.5):
+                    break
+                if q.exception() is not None:
+                    raise q.exception()
+            else:
+                raise TimeoutError(
+                    f"{prefix} drain did not consume all staged files in 300s"
+                )
+        finally:
+            q.stop()
+            q.awaitTermination(60)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return acc
 
 
-def _snapshot_df(spark: SparkSession, acc, columns, schema) -> DataFrame:
-    """Key-sorted {key: value-tuple} snapshot → DataFrame through
-    pandas, so createDataFrame takes the Arrow fast path instead of a
-    py4j row upload (the drain gates' snapshots are 1k-12k rows at
+def _snapshot_df(spark: SparkSession, acc, schema: str) -> DataFrame:
+    """Key-sorted {key: value-tuple} snapshot → DataFrame with the flat
+    DDL ``schema`` (key first, then the tuple's fields in order),
+    through pandas so createDataFrame takes the Arrow fast path instead
+    of a py4j row upload (the drain gates' snapshots are 1k-12k rows at
     bench volume)."""
     import pandas as pd
+    from pyspark.sql.types import StructType
 
-    items = sorted(acc.items())
-    data = {columns[0]: [k for k, _ in items]}
-    for i, c in enumerate(columns[1:]):
-        data[c] = [v[i] for _, v in items]
-    return spark.createDataFrame(pd.DataFrame(data), schema)
-
-
-def _invoice_state_snapshot_df(spark: SparkSession, acc) -> DataFrame:
-    """Shared assembly for the three value-state gates: the drained
-    {InvoiceNo: (mn, mx, number_items, lines)} snapshot as a DataFrame
-    in the gates' hashed column shape. Built through pandas so
-    createDataFrame takes the Arrow fast path instead of a py4j row
-    upload (~12k rows per gate at bench volume)."""
-    import pandas as pd
-
-    items = sorted(acc.items())
+    struct = StructType.fromDDL(schema)
     pdf = pd.DataFrame(
-        {
-            "InvoiceNo": [k for k, _ in items],
-            "mn": [v[0] for _, v in items],
-            "mx": [v[1] for _, v in items],
-            "number_items": [int(v[2]) for _, v in items],
-            "lines": [int(v[3]) for _, v in items],
-        }
+        [(k, *v) for k, v in sorted(acc.items())], columns=struct.names
     )
-    out = spark.createDataFrame(
-        pdf,
-        "InvoiceNo string, mn double, mx double, number_items long, lines int",
-    )
-    return out.select(
+    return spark.createDataFrame(pdf, struct)
+
+
+# The three value-state gates' hashed shape: the fold-order-independent
+# invoice-state fields.
+_INVOICE_STATE_HASHED = (
+    "InvoiceNo string, min_unit_price double, max_unit_price double, "
+    "number_items long, lines int"
+)
+
+
+def _hashed_invoice_state(updates: DataFrame) -> DataFrame:
+    """Project an invoice-state stream (INVOICE_STATE_SCHEMA) down to
+    _INVOICE_STATE_HASHED. min/max stay the IDENTICAL IEEE double on
+    both engines (same division, same parquet round-trip), so they ship
+    unrounded — the weighted_invoice_features convention; a divergent
+    pre-round (Spark HALF_UP vs DuckDB) flips .5-boundary rows."""
+    return updates.select(
         "InvoiceNo",
-        F.col("mn").alias("min_unit_price"),
-        F.col("mx").alias("max_unit_price"),
-        "number_items",
-        "lines",
+        F.col("MinUnitPrice").alias("min_unit_price"),
+        F.col("MaxUnitPrice").alias("max_unit_price"),
+        F.col("NumberItems").cast("long").alias("number_items"),
+        F.col("Lines").alias("lines"),
     )
 
 
@@ -562,16 +518,18 @@ def q_streaming_custom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     the arrival-order artifacts (head-of-batch hour, incremental avg)
     are deliberately not hashed (their fidelity is unit-tested in
     test_streaming/test_state_recovery)."""
+    from bigdata_invoice_stream_analysis_spark.streaming.state import (
+        apply_invoice_state,
+    )
+
     p = prepared_purchase_lines(spark, sf_dir)
     # Bench diet applies at staging (the stream then reads less too);
     # driver/parity never set the env var, so they stage full volume.
     p = _drain_input_diet(p)
-    acc = run_custom_state_drain(spark, p)
-    # min/max are the IDENTICAL IEEE double on both engines (same
-    # division, same parquet round-trip), so they ship unrounded —
-    # the weighted_invoice_features convention; a divergent pre-round
-    # (Spark HALF_UP vs DuckDB) flips .5-boundary rows.
-    return _invoice_state_snapshot_df(spark, acc)
+    acc = run_custom_state_drain(
+        spark, p, lambda s: _hashed_invoice_state(apply_invoice_state(s))
+    )
+    return _snapshot_df(spark, acc, _INVOICE_STATE_HASHED)
 
 
 @query(
@@ -610,9 +568,11 @@ def q_streaming_state_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = _drain_input_diet(p)
     with rocksdb_provider(spark):
         acc = run_custom_state_drain(
-            spark, p, transform=transform_invoice_state, prefix="state_v2"
+            spark, p,
+            lambda s: _hashed_invoice_state(transform_invoice_state(s)),
+            prefix="state_v2",
         )
-    return _invoice_state_snapshot_df(spark, acc)
+    return _snapshot_df(spark, acc, _INVOICE_STATE_HASHED)
 
 
 @query(
@@ -640,8 +600,8 @@ def q_streaming_state_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """State-v2 TTL under the driver gate: the same 3-micro-batch
     invoice drain as streaming_state_v2, but with engine-managed
     value-state TTL (``evict_after_ms=1`` → ttlDurationMs, RocksDB TTL
-    column family, timeMode="ProcessingTime" — the branch
-    streaming/state.py:271-275 that r04 left unit-tested only). The
+    column family, timeMode="ProcessingTime" — the TTL branch of
+    streaming/state.transform_invoice_state). The
     1 ms TTL makes eviction DETERMINISTIC despite being wall-clock
     based: consecutive micro-batches are always ≫1 ms apart, so every
     key's state has expired by the next batch that touches it —
@@ -669,59 +629,13 @@ def q_streaming_state_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
         acc = run_custom_state_drain(
             spark,
             p,
-            transform=lambda s: transform_invoice_state(s, evict_after_ms=1),
+            lambda s: _hashed_invoice_state(
+                transform_invoice_state(s, evict_after_ms=1)
+            ),
             prefix="state_ttl",
             stop_after_files=True,
         )
-    return _invoice_state_snapshot_df(spark, acc)
-
-
-def run_timer_state_drain(
-    spark: SparkSession, p: DataFrame, prefix: str = "state_timers"
-) -> dict[str, tuple[int, int, int]]:
-    """Drain transform_invoice_timers over the 3 staged buckets and
-    return the last-emission-wins snapshot {InvoiceNo: (n_rows,
-    qty_sum, n_fires)}. Every output row comes from handleExpiredTimer
-    (input processing emits nothing), and because an already-expired
-    timer fires within its own registration batch — after input rows —
-    every data batch is non-empty at the sink, so the stop rule is the
-    same as the TTL drain's: all staged files consumed."""
-    import threading
-
-    from bigdata_invoice_stream_analysis_spark.streaming.state import (
-        transform_invoice_timers,
-    )
-
-    n_files = 3
-    stream = _stage_bucketed_stream(spark, p, prefix, n_files)
-    scored = transform_invoice_timers(stream)
-    acc: dict[str, tuple[int, int, int]] = {}
-    drained = threading.Event()
-    data_batches = [0]
-
-    def sink(bdf, bid):
-        # Arrow transfer + columnar access (see run_custom_state_drain).
-        pdf = bdf.toPandas()
-        if len(pdf):
-            data_batches[0] += 1
-        for inv, nr, qs, nf in zip(
-            pdf["InvoiceNo"], pdf["n_rows"], pdf["qty_sum"], pdf["n_fires"]
-        ):
-            acc[inv] = (int(nr), int(qs), int(nf))
-        if bid >= n_files - 1 and data_batches[0] >= n_files:
-            drained.set()
-
-    ckpt = fresh_checkpoint(f"stream_{prefix}_ckpt_")
-    writer = (
-        scored.writeStream.outputMode("update")
-        .foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-    )
-    _drive_until_drained(
-        spark, writer, drained, "timer",
-        partitions=_drain_state_partitions(spark, python_state=True),
-    )
-    return acc
+    return _snapshot_df(spark, acc, _INVOICE_STATE_HASHED)
 
 
 @query(
@@ -752,16 +666,22 @@ def q_streaming_state_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
     the last fire's snapshot carries the COMPLETE totals (n_rows,
     integer qty_sum) — a timer firing before its batch's input, a
     re-fire, or a lost registration each flip the hash. ProcessingTime
-    timeMode again requires the driver-side stop (run_timer_state_drain
-    shares the TTL gate's machinery)."""
+    timeMode again requires the driver-side stop (``stop_after_files``,
+    the TTL gate's rule: every data batch emits at the sink, because an
+    already-expired timer fires within its own registration batch)."""
+    from bigdata_invoice_stream_analysis_spark.streaming.state import (
+        transform_invoice_timers,
+    )
+
     p = prepared_purchase_lines(spark, sf_dir)
     p = _drain_input_diet(p)
     with rocksdb_provider(spark):
-        acc = run_timer_state_drain(spark, p)
+        acc = run_custom_state_drain(
+            spark, p, transform_invoice_timers,
+            prefix="state_timers", stop_after_files=True,
+        )
     return _snapshot_df(
-        spark, acc,
-        ["InvoiceNo", "n_rows", "qty_sum", "n_fires"],
-        "InvoiceNo string, n_rows long, qty_sum long, n_fires int",
+        spark, acc, "InvoiceNo string, n_rows long, qty_sum long, n_fires int"
     )
 
 
@@ -825,37 +745,11 @@ def q_streaming_state_list_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = prepared_purchase_lines(spark, sf_dir)
     p = _drain_input_diet(p)
     with rocksdb_provider(spark):
-        stream = _stage_bucketed_stream(spark, p, "state_list_map", 3)
-        scored = transform_invoice_list_map(stream)
-        acc: dict[str, tuple[int, int, int, int]] = {}
-
-        def sink(bdf, _bid):
-            # Arrow transfer + columnar access (see
-            # run_custom_state_drain).
-            pdf = bdf.toPandas()
-            for inv, nb, wq, nband, bc in zip(
-                pdf["InvoiceNo"],
-                pdf["n_batches"],
-                pdf["weighted_qty"],
-                pdf["n_bands"],
-                pdf["band_checksum"],
-            ):
-                acc[inv] = (int(nb), int(wq), int(nband), int(bc))
-
-        ckpt = fresh_checkpoint("stream_state_list_map_ckpt_")
-        writer = (
-            scored.writeStream.outputMode("update")
-            .foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-        )
-        _run_drain(
-            spark, writer,
-            partitions=_drain_state_partitions(spark, python_state=True),
+        acc = run_custom_state_drain(
+            spark, p, transform_invoice_list_map, prefix="state_list_map"
         )
     return _snapshot_df(
         spark, acc,
-        ["InvoiceNo", "n_batches", "weighted_qty", "n_bands", "band_checksum"],
         "InvoiceNo string, n_batches int, weighted_qty long, "
         "n_bands int, band_checksum long",
     )

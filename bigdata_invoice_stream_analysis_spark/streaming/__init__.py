@@ -12,7 +12,8 @@ Topology (one readStream, four outputs):
 Modules:
   sources   — Kafka / file / rate streaming sources (S3, test stand-ins)
   pipeline  — declarative branch builders (P1-P4, W1, A3/A4)
-  state     — applyInPandasWithState legacy-exact keyed state (W2/A4)
+  state     — legacy-exact keyed state (W2/A4): one fold, run under
+              applyInPandasWithState or transformWithStateInPandas
   scoring   — stream-safe centroid scoring (M3/M4, pure column math)
   sinks     — Kafka / parquet / memory / idempotent foreachBatch sinks
               (S4/W4/W6), one query + checkpoint per output

@@ -5,11 +5,10 @@ see sources.py) and returns an unbounded DataFrame; callers attach sinks
 (sinks.py). All expressions are native Columns — the only Python in any
 hot path is the optional legacy-exact state module (state.py).
 
-Window-time modes (SURVEY.md §2.5 late-data note): the reference counts
-by *arrival* time (processing-time DStream windows). The rebuild
-defaults to *event* time parsed from InvoiceDate with a watermark — the
-correct-at-scale semantics under replay/out-of-order arrival — and
-keeps ``time_mode="processing"`` for reference-faithful behavior.
+Window time (SURVEY.md §2.5 late-data note): the reference counts by
+*arrival* time (processing-time DStream windows). The rebuild uses
+*event* time parsed from InvoiceDate with a watermark — the
+correct-at-scale semantics under replay/out-of-order arrival.
 """
 
 from __future__ import annotations
@@ -32,15 +31,9 @@ def event_time(line: Column) -> Column:
     return parse_invoice_ts(F.get(validate.split_line(line), 4))
 
 
-def with_time(lines: DataFrame, time_mode: str = "event") -> DataFrame:
-    """Attach the window-time column ``ts``."""
-    if time_mode == "event":
-        ts = event_time(F.col("value"))
-    elif time_mode == "processing":
-        ts = F.col("ingest_ts")
-    else:
-        raise ValueError(f"unknown time_mode {time_mode!r}")
-    return lines.withColumn("ts", ts)
+def with_time(lines: DataFrame) -> DataFrame:
+    """Attach the event-time column ``ts``."""
+    return lines.withColumn("ts", event_time(F.col("value")))
 
 
 def invalid_lines(lines: DataFrame) -> DataFrame:
@@ -52,11 +45,7 @@ def invalid_lines(lines: DataFrame) -> DataFrame:
 
 
 def cancellation_counts(
-    lines: DataFrame,
-    window: str = DEFAULT_WINDOW,
-    slide: str = DEFAULT_SLIDE,
-    watermark: str = DEFAULT_WATERMARK,
-    time_mode: str = "event",
+    lines: DataFrame, watermark: str = DEFAULT_WATERMARK
 ) -> DataFrame:
     """Branch 2 (P2 + A2 + A3 + W1): count of distinct cancelled
     invoices per sliding window (reduceByKeyAndWindow with inverse
@@ -83,12 +72,12 @@ def cancellation_counts(
         & validate.is_cancelled_line(F.col("value")),
     ).otherwise(F.lit(False))
     cancelled = (
-        with_time(lines, time_mode)
+        with_time(lines)
         .withWatermark("ts", watermark)
         .filter(keep)
         .select(F.col("key").alias("InvoiceNo"), "ts")
     )
-    w = F.window("ts", window, slide)
+    w = F.window("ts", DEFAULT_WINDOW, DEFAULT_SLIDE)
     per_invoice = cancelled.groupBy(w.alias("window"), "InvoiceNo").agg(
         F.count(F.lit(1)).alias("n_lines")
     )
@@ -102,12 +91,10 @@ def cancellation_counts(
     )
 
 
-def good_purchases(lines: DataFrame, time_mode: str = "event") -> DataFrame:
+def good_purchases(lines: DataFrame) -> DataFrame:
     """Branch 3 input (P3 + P4): typed purchase rows of good lines
     (InvoicePipeline.scala:133-134 + 85-90), with the ``ts`` column."""
-    good = with_time(lines, time_mode).filter(
-        validate.is_good_line(F.col("value"))
-    )
+    good = with_time(lines).filter(validate.is_good_line(F.col("value")))
     fields = validate.split_line(F.col("value"))
     return good.select(
         F.col("ts"),
@@ -123,9 +110,7 @@ def good_purchases(lines: DataFrame, time_mode: str = "event") -> DataFrame:
 
 
 def deduped_lines(
-    lines: DataFrame,
-    watermark: str = DEFAULT_WATERMARK,
-    time_mode: str = "event",
+    lines: DataFrame, watermark: str = DEFAULT_WATERMARK
 ) -> DataFrame:
     """A2 generalized across micro-batches: drop replayed duplicate
     lines within the watermark horizon via
@@ -136,7 +121,7 @@ def deduped_lines(
     watermark: a line's fingerprint is evicted once no duplicate can
     still arrive. Lines whose event time cannot be parsed are passed
     through (they route to the invalid sink downstream)."""
-    wt = with_time(lines, time_mode)
+    wt = with_time(lines)
     parsed = wt.filter(F.col("ts").isNotNull())
     unparsed = wt.filter(F.col("ts").isNull())
     deduped = parsed.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
@@ -192,7 +177,6 @@ def cancellation_matches(
     lines: DataFrame,
     watermark: str = DEFAULT_WATERMARK,
     within: str = "2 hours",
-    time_mode: str = "event",
 ) -> DataFrame:
     """Stream-stream interval join (absent from the reference —
     SURVEY.md §2.12): match each cancellation line ``C<no>`` to the
@@ -205,7 +189,7 @@ def cancellation_matches(
     O(stream history). Output is append-mode (matches are final once
     the watermark passes)."""
     purchases = (
-        good_purchases(lines, time_mode)
+        good_purchases(lines)
         .select(
             F.col("InvoiceNo"),
             F.col("ts").alias("purchase_ts"),
@@ -214,7 +198,7 @@ def cancellation_matches(
         )
         .withWatermark("purchase_ts", watermark)
     )
-    with_t = with_time(lines, time_mode)
+    with_t = with_time(lines)
     cancels = (
         with_t.filter(
             ~validate.is_invalid_line(F.col("value"))

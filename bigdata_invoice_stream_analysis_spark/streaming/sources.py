@@ -9,7 +9,7 @@ downstream code because every source normalizes to the same envelope:
     key: string        -- Kafka key (InvoiceNo; derived from the line
                           for non-Kafka sources, as the producer would)
     value: string      -- the raw comma-joined 8-field line
-    ingest_ts: timestamp -- arrival time (processing-time window mode)
+    ingest_ts: timestamp -- arrival time
 """
 
 from __future__ import annotations

@@ -1,7 +1,7 @@
-"""Legacy-exact keyed invoice state via applyInPandasWithState (W2/A4).
+"""Legacy-exact keyed invoice state (W2/A4) on both state APIs.
 
-Reproduces ``updateInvoiceState`` (InvoicePipeline.scala:93-130)
-semantics exactly, per micro-batch and per key:
+One fold (``_make_fold``) reproduces ``updateInvoiceState``
+(InvoicePipeline.scala:93-130) exactly, per micro-batch and per key:
 
   * quantity-weighted running mean:
       avg ← (avg·n + price·qty) / (n + qty), folded line by line;
@@ -15,9 +15,14 @@ semantics exactly, per micro-batch and per key:
     reference's ``previous.lines + 1``, InvoicePipeline.scala:126);
   * emits only keys that received data this batch (updateStateByKey
     returns None for quiet keys — which also DROPS their state,
-    InvoicePipeline.scala:99; here an optional processing-time timeout
-    reproduces that eviction, default keeps state — strictly more
-    correct for invoices spanning quiet batches).
+    InvoicePipeline.scala:99; here an optional eviction reproduces
+    that, default keeps state — strictly more correct for invoices
+    spanning quiet batches).
+
+``apply_invoice_state`` runs the fold under applyInPandasWithState
+(eviction = processing-time timeout); ``transform_invoice_state`` runs
+it under transformWithStateInPandas (state v2; eviction = value-state
+TTL). The timer and list/map processors cover the rest of the v2 API.
 
 This is the one operator whose semantics genuinely need custom state —
 Arrow-batched (not row-at-a-time), grouped by InvoiceNo so each state
@@ -47,52 +52,70 @@ _STATE_SCHEMA = (
 )
 
 
-def _fold_batch(pdf_iter, avg, mn, mx, number_items):
-    """The reference's line-by-line fold (InvoicePipeline.scala:104-114)
-    over one micro-batch's Arrow chunks. Returns the updated running
-    values plus the head-of-batch hour/customer artifacts."""
-    head_hour = 0.0
-    customer = ""
-    saw_data = False
-    for pdf in pdf_iter:
-        if len(pdf) == 0:
-            continue
-        if not saw_data:
-            # Head purchase of this batch (InvoicePipeline.scala:104).
-            head = pdf.iloc[0]
-            ts = head["ts"]
-            head_hour = (
-                0.0 if pd.isna(ts) else float(ts.hour + ts.minute / 60.0)
-            )
-            customer = str(head["CustomerID"])
-            saw_data = True
-        # Line-by-line weighted-mean fold (InvoicePipeline.scala:109-114).
-        for price, qty in zip(pdf["UnitPrice"], pdf["Quantity"]):
-            price, qty = float(price), float(qty)
-            avg = (avg * number_items + price * qty) / (number_items + qty)
-            mn = min(mn, price)
-            mx = max(mx, price)
-            number_items += qty
-    return avg, mn, mx, number_items, head_hour, customer, saw_data
+def _make_fold():
+    """Build the reference's per-key, per-micro-batch fold
+    (InvoicePipeline.scala:93-130) that BOTH state APIs call. Built by
+    a factory so the returned closure cloudpickles BY VALUE:
+    transformWithState runs its processor in a separately-spawned
+    long-lived Python worker whose sys.path need not contain this
+    package, so a module-level function (pickled by name) would crash
+    that worker with ModuleNotFoundError. The closure touches only
+    pandas and float constants, which pickle without this package.
 
+    ``fold(invoice_no, pdf_iter, prev, batch_ms)`` folds the key's
+    Arrow chunks into ``prev`` (a ``_STATE_SCHEMA`` tuple, or None for
+    a new key) and returns ``(state, row)`` — the updated state tuple
+    and the one-row output frame — or ``(None, None)`` when the chunks
+    held no rows. ``batch_ms`` is the engine's processing time; None or
+    a non-positive value (no engine clock) means wall-clock now."""
 
-def _emit_row(invoice_no, avg, mn, mx, head_hour, number_items, batch_ms, lines, customer):
-    return pd.DataFrame(
-        {
-            "InvoiceNo": [invoice_no],
-            "AvgUnitPrice": [avg],
-            "MinUnitPrice": [mn],
-            "MaxUnitPrice": [mx],
-            "Time": [head_hour],
-            "NumberItems": [number_items],
-            "LastUpdated": [batch_ms],
-            "Lines": [int(lines)],
-            "CustomerID": [customer],
-        }
-    )
+    def fold(invoice_no, pdf_iter, prev, batch_ms):
+        if prev is None:
+            avg, mn, mx, number_items, lines = 0.0, _SEED_MIN, _SEED_MAX, 0.0, 0
+        else:
+            avg, mn, mx, number_items, _last, lines = prev
+        head = None
+        for pdf in pdf_iter:
+            if len(pdf) == 0:
+                continue
+            if head is None:
+                # Head purchase of this batch (InvoicePipeline.scala:104).
+                head = pdf.iloc[0]
+            # Line-by-line weighted-mean fold (InvoicePipeline.scala:109-114).
+            for price, qty in zip(pdf["UnitPrice"], pdf["Quantity"]):
+                price, qty = float(price), float(qty)
+                avg = (avg * number_items + price * qty) / (number_items + qty)
+                mn = min(mn, price)
+                mx = max(mx, price)
+                number_items += qty
+        if head is None:
+            return None, None
+        lines += 1
+        if batch_ms is None or batch_ms <= 0:
+            batch_ms = int(pd.Timestamp.utcnow().value // 1_000_000)
+        ts = head["ts"]
+        hour = 0.0 if pd.isna(ts) else float(ts.hour + ts.minute / 60.0)
+        row = pd.DataFrame(
+            {
+                "InvoiceNo": [invoice_no],
+                "AvgUnitPrice": [avg],
+                "MinUnitPrice": [mn],
+                "MaxUnitPrice": [mx],
+                "Time": [hour],
+                "NumberItems": [number_items],
+                "LastUpdated": [batch_ms],
+                "Lines": [int(lines)],
+                "CustomerID": [str(head["CustomerID"])],
+            }
+        )
+        return (avg, mn, mx, number_items, batch_ms, lines), row
+
+    return fold
 
 
 def _make_updater(evict_after_ms: int | None):
+    fold = _make_fold()
+
     def update(
         key: tuple[str],
         pdf_iter: Iterator[pd.DataFrame],
@@ -103,24 +126,15 @@ def _make_updater(evict_after_ms: int | None):
             # key returns None → state dropped (InvoicePipeline.scala:99).
             state.remove()
             return
-        if state.exists:
-            avg, mn, mx, number_items, _last, lines = state.get
-        else:
-            avg, mn, mx, number_items, lines = 0.0, _SEED_MIN, _SEED_MAX, 0.0, 0
-
-        avg, mn, mx, number_items, head_hour, customer, saw_data = _fold_batch(
-            pdf_iter, avg, mn, mx, number_items
+        new, row = fold(
+            key[0], pdf_iter, state.get if state.exists else None, None
         )
-        if not saw_data:
+        if new is None:
             return
-        lines += 1
-        batch_ms = int(pd.Timestamp.utcnow().value // 1_000_000)
-        state.update((avg, mn, mx, number_items, batch_ms, lines))
+        state.update(new)
         if evict_after_ms is not None:
             state.setTimeoutDuration(evict_after_ms)
-        yield _emit_row(
-            key[0], avg, mn, mx, head_hour, number_items, batch_ms, lines, customer
-        )
+        yield row
 
     return update
 
@@ -149,83 +163,66 @@ def apply_invoice_state(
 
 
 def _make_processor(evict_after_ms: int | None):
-    """Build the state-v2 processor as a SELF-CONTAINED dynamic class:
-    transformWithState runs the processor in a separately-spawned
-    long-lived Python driver worker whose sys.path need not contain
-    this package, so the class (and every helper it touches) must
-    cloudpickle BY VALUE — a module-level class would serialize as a
-    by-name import and crash that worker with ModuleNotFoundError.
+    """Build the state-v2 processor as a SELF-CONTAINED dynamic class
+    (cloudpickled by value, like the fold it calls — see _make_fold).
     Only pyspark/pandas (always on the worker path) are imported."""
     from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
-    state_schema = (
-        "avg double, mn double, mx double, number_items double, "
-        "last_updated long, lines int"
-    )
+    fold = _make_fold()
 
     class InvoiceStateProcessor(StatefulProcessor):
         def init(self, handle) -> None:
             self._state = handle.getValueState(
-                "invoice", state_schema, evict_after_ms
+                "invoice", _STATE_SCHEMA, evict_after_ms
             )
 
         def handleInputRows(self, key, rows, timer_values):
-            import pandas as pd
-
-            prev = self._state.get()
-            if prev is not None:
-                avg, mn, mx, number_items, _last, lines = prev
-            else:
-                # Reference dummy seeds (InvoicePipeline.scala:96):
-                # Double.MaxValue-equivalent min, MinPositiveValue max.
-                avg, mn, mx, number_items, lines = (
-                    0.0, float("inf"), 4.9e-324, 0.0, 0,
-                )
-            head_hour, customer, saw_data = 0.0, "", False
-            for pdf in rows:
-                if len(pdf) == 0:
-                    continue
-                if not saw_data:
-                    head = pdf.iloc[0]
-                    ts = head["ts"]
-                    head_hour = (
-                        0.0 if pd.isna(ts) else float(ts.hour + ts.minute / 60.0)
-                    )
-                    customer = str(head["CustomerID"])
-                    saw_data = True
-                for price, qty in zip(pdf["UnitPrice"], pdf["Quantity"]):
-                    price, qty = float(price), float(qty)
-                    avg = (avg * number_items + price * qty) / (
-                        number_items + qty
-                    )
-                    mn = min(mn, price)
-                    mx = max(mx, price)
-                    number_items += qty
-            if not saw_data:
-                return
-            lines += 1
-            batch_ms = int(timer_values.getCurrentProcessingTimeInMs())
-            if batch_ms <= 0:
-                batch_ms = int(pd.Timestamp.utcnow().value // 1_000_000)
-            self._state.update((avg, mn, mx, number_items, batch_ms, lines))
-            yield pd.DataFrame(
-                {
-                    "InvoiceNo": [key[0]],
-                    "AvgUnitPrice": [avg],
-                    "MinUnitPrice": [mn],
-                    "MaxUnitPrice": [mx],
-                    "Time": [head_hour],
-                    "NumberItems": [number_items],
-                    "LastUpdated": [batch_ms],
-                    "Lines": [int(lines)],
-                    "CustomerID": [customer],
-                }
+            new, row = fold(
+                key[0], rows, self._state.get(),
+                timer_values.getCurrentProcessingTimeInMs(),
             )
-
-        def close(self) -> None:
-            pass
+            if new is not None:
+                self._state.update(new)
+                yield row
 
     return InvoiceStateProcessor()
+
+
+def _transform_with_state(
+    purchases: DataFrame, processor, output_schema, time_mode: str
+) -> DataFrame:
+    """The one state-v2 entry: ``groupBy("InvoiceNo")
+    .transformWithStateInPandas`` in update mode, with the wire set up
+    first. The v2 state-server protocol speaks protobuf between the JVM
+    and its Python workers. A real ``protobuf`` package is used when
+    installed; otherwise the in-repo miniproto shim
+    (vendor/protobuf_shim — a from-scratch implementation of the public
+    proto3 wire format) is installed on the driver and shipped to the
+    Python workers via addPyFile, so state-v2 executes even in
+    environments without the dependency. If neither can be set up this
+    raises immediately (clear error beats a mid-query worker crash),
+    and apply_invoice_state remains the value-state fallback."""
+    try:
+        from bigdata_invoice_stream_analysis_spark.vendor.protobuf_shim import (
+            ensure_on_workers,
+            install,
+        )
+
+        install()
+        ensure_on_workers(purchases.sparkSession)
+    except Exception as e:  # pragma: no cover - defensive
+        raise RuntimeError(
+            "transformWithStateInPandas requires the 'protobuf' package "
+            "(pyspark's state-v2 wire protocol) and the in-repo miniproto "
+            "shim could not be installed; use apply_invoice_state "
+            "on environments without it"
+        ) from e
+    return purchases.groupBy("InvoiceNo").transformWithStateInPandas(
+        processor,
+        outputStructType=output_schema,
+        outputMode="update",
+        timeMode=time_mode,
+    )
 
 
 def _make_timer_processor():
@@ -282,9 +279,6 @@ def _make_timer_processor():
                 }
             )
 
-        def close(self) -> None:
-            pass
-
     return InvoiceTimerProcessor()
 
 
@@ -295,29 +289,13 @@ def transform_invoice_timers(purchases: DataFrame) -> DataFrame:
     batches only update state and arm an already-expired processing-
     time timer; the engine's same-batch timer evaluation then emits
     the snapshot. Requires timeMode="ProcessingTime" (so the drain
-    must be stopped from the driver — see run_timer_state_drain) and
-    the RocksDB provider. Wire served by the miniproto shim exactly as
-    transform_invoice_state."""
-    try:
-        from bigdata_invoice_stream_analysis_spark.vendor.protobuf_shim import (
-            ensure_on_workers,
-            install,
-        )
-
-        install()
-        ensure_on_workers(purchases.sparkSession)
-    except Exception as e:  # pragma: no cover - defensive
-        raise RuntimeError(
-            "transformWithStateInPandas requires the 'protobuf' package "
-            "and the in-repo miniproto shim could not be installed"
-        ) from e
-    return purchases.groupBy("InvoiceNo").transformWithStateInPandas(
+    must be stopped from the driver — see ``stop_after_files`` in
+    plans/drains.run_custom_state_drain) and the RocksDB provider."""
+    return _transform_with_state(
+        purchases,
         _make_timer_processor(),
-        outputStructType=(
-            "InvoiceNo string, n_rows long, qty_sum long, n_fires int"
-        ),
-        outputMode="update",
-        timeMode="ProcessingTime",
+        "InvoiceNo string, n_rows long, qty_sum long, n_fires int",
+        "ProcessingTime",
     )
 
 
@@ -390,9 +368,6 @@ def _make_list_map_processor():
                 }
             )
 
-        def close(self) -> None:
-            pass
-
     return InvoiceListMapProcessor()
 
 
@@ -401,29 +376,13 @@ def transform_invoice_list_map(purchases: DataFrame) -> DataFrame:
     state kinds beyond value state (getListState / getMapState), which
     the v1 applyInPandasWithState API cannot express without manual
     encoding into one struct. timeMode stays "None" (no TTL, no
-    timers), so the plain availableNow drain terminates. Wire served
-    by the miniproto shim exactly as transform_invoice_state."""
-    try:
-        from bigdata_invoice_stream_analysis_spark.vendor.protobuf_shim import (
-            ensure_on_workers,
-            install,
-        )
-
-        install()
-        ensure_on_workers(purchases.sparkSession)
-    except Exception as e:  # pragma: no cover - defensive
-        raise RuntimeError(
-            "transformWithStateInPandas requires the 'protobuf' package "
-            "and the in-repo miniproto shim could not be installed"
-        ) from e
-    return purchases.groupBy("InvoiceNo").transformWithStateInPandas(
+    timers), so the plain availableNow drain terminates."""
+    return _transform_with_state(
+        purchases,
         _make_list_map_processor(),
-        outputStructType=(
-            "InvoiceNo string, n_batches int, weighted_qty long, "
-            "n_bands int, band_checksum long"
-        ),
-        outputMode="update",
-        timeMode="None",
+        "InvoiceNo string, n_batches int, weighted_qty long, "
+        "n_bands int, band_checksum long",
+        "None",
     )
 
 
@@ -441,35 +400,11 @@ def transform_invoice_state(
     "None" otherwise — NOT harmless to leave on: with ProcessingTime
     the engine keeps scheduling timer-evaluation micro-batches, so an
     availableNow drain never terminates (measured: 267 empty batches
-    before timeout).
-
-    Wire dependency: the v2 state-server protocol speaks protobuf
-    between the JVM and its Python workers. A real ``protobuf`` package
-    is used when installed; otherwise the in-repo miniproto shim
-    (vendor/protobuf_shim — a from-scratch implementation of the public
-    proto3 wire format) is installed on the driver and shipped to the
-    Python workers via addPyFile, so state-v2 executes even in
-    environments without the dependency. If neither can be set up this
-    raises immediately (clear error beats a mid-query worker crash),
-    and apply_invoice_state remains the equivalent fallback."""
-    try:
-        from bigdata_invoice_stream_analysis_spark.vendor.protobuf_shim import (
-            ensure_on_workers,
-            install,
-        )
-
-        install()
-        ensure_on_workers(purchases.sparkSession)
-    except Exception as e:  # pragma: no cover - defensive
-        raise RuntimeError(
-            "transformWithStateInPandas requires the 'protobuf' package "
-            "(pyspark's state-v2 wire protocol) and the in-repo miniproto "
-            "shim could not be installed; use apply_invoice_state "
-            "on environments without it"
-        ) from e
-    return purchases.groupBy("InvoiceNo").transformWithStateInPandas(
+    before timeout). Without the protobuf package the wire is served by
+    the in-repo miniproto shim (see _transform_with_state)."""
+    return _transform_with_state(
+        purchases,
         _make_processor(evict_after_ms),
-        outputStructType=INVOICE_STATE_SCHEMA,
-        outputMode="update",
-        timeMode="ProcessingTime" if evict_after_ms is not None else "None",
+        INVOICE_STATE_SCHEMA,
+        "ProcessingTime" if evict_after_ms is not None else "None",
     )

@@ -184,8 +184,11 @@ def _custom_state_drain(spark, p):
     from bigdata_invoice_stream_analysis_spark.plans.drains import (
         run_custom_state_drain,
     )
+    from bigdata_invoice_stream_analysis_spark.streaming.state import (
+        apply_invoice_state,
+    )
 
-    return len(run_custom_state_drain(spark, p))
+    return len(run_custom_state_drain(spark, p, apply_invoice_state))
 
 
 def _state_v2_drain(spark, p):
@@ -208,8 +211,7 @@ def _state_v2_drain(spark, p):
     with rocksdb_provider(spark):
         return len(
             run_custom_state_drain(
-                spark, p, transform=transform_invoice_state,
-                prefix="probe_state_v2",
+                spark, p, transform_invoice_state, prefix="probe_state_v2"
             )
         )
 

@@ -6,6 +6,7 @@ InvoicePipeline.scala:99)."""
 from __future__ import annotations
 
 import time
+from contextlib import nullcontext
 
 import pytest
 
@@ -23,11 +24,10 @@ def _write_chunk(src, idx, lines):
     os.utime(p, (1_700_000_000 + idx, 1_700_000_000 + idx))
 
 
-def _run_once(spark, src, ckpt, evict_after_ms=None):
+def _run_once(spark, src, ckpt, evict_after_ms=None,
+              transform=state.apply_invoice_state):
     lines = file_lines_source(spark, str(src), max_files_per_trigger=1)
-    updates = state.apply_invoice_state(
-        P.good_purchases(lines), evict_after_ms=evict_after_ms
-    )
+    updates = transform(P.good_purchases(lines), evict_after_ms=evict_after_ms)
     rows = []
 
     def collect(bdf, bid):
@@ -45,61 +45,36 @@ def line(inv, qty, date, price):
     return f"{inv},S1,item,{qty},{date},{price},7,ES"
 
 
-def test_state_survives_restart(spark, tmp_path):
-    """Run 1 seeds I1's state; run 2 (same checkpoint, new file) folds
-    into the RECOVERED state: weighted mean spans both runs."""
-    src, ckpt = tmp_path / "in", tmp_path / "ckpt"
-    _write_chunk(src, 0, [line("I1", 2, "1/4/2011 9:15", "10.0")])
-    r1 = _run_once(spark, src, ckpt)
-    assert r1["I1"].Lines == 1
-    assert r1["I1"].AvgUnitPrice == pytest.approx(10.0)
-
-    _write_chunk(src, 1, [line("I1", 2, "1/4/2011 11:00", "30.0")])
-    r2 = _run_once(spark, src, ckpt)
-    assert set(r2) == {"I1"}  # only the updated key emits
-    assert r2["I1"].Lines == 2  # batch count carried over the restart
-    assert r2["I1"].AvgUnitPrice == pytest.approx((2 * 10 + 2 * 30) / 4)
-    assert r2["I1"].Time == pytest.approx(11.0)  # head of the new batch
-
-
-def test_state_v2_survives_restart(spark, tmp_path):
-    """transformWithStateInPandas twin of test_state_survives_restart:
-    run 1 seeds I1's value state in the RocksDB store; run 2 starts a
-    NEW streaming query against the same checkpoint and must fold the
-    new file into the RECOVERED state — min/max/items/Lines all span
-    both runs, proving the RocksDB snapshot restore works end-to-end
-    through the miniproto wire (state server re-created per query)."""
+@pytest.mark.parametrize(
+    "transform", [state.apply_invoice_state, state.transform_invoice_state],
+    ids=["v1", "v2"],
+)
+def test_state_survives_restart(spark, tmp_path, transform):
+    """Run 1 seeds I1's state; run 2 starts a NEW streaming query on the
+    same checkpoint and must fold the new file into the RECOVERED state:
+    weighted mean, min/max, items and Lines all span both runs, and Time
+    is the head of the new batch. v2 restores its value state from the
+    RocksDB snapshot through the miniproto wire (state server re-created
+    per query)."""
     from bigdata_invoice_stream_analysis_spark.plans.drains import (
         rocksdb_provider,
     )
 
-    src, ckpt = tmp_path / "in", tmp_path / "ckpt_v2"
-
-    def run_v2():
-        lines = file_lines_source(spark, str(src), max_files_per_trigger=1)
-        updates = state.transform_invoice_state(P.good_purchases(lines))
-        rows = []
-
-        def collect(bdf, bid):
-            rows.extend(bdf.collect())
-
-        q = sinks.foreach_batch_collector(
-            updates, collect, output_mode="update", checkpoint=str(ckpt),
-            trigger_available_now=True,
-        )
-        q.awaitTermination(120)
-        return {r.InvoiceNo: r for r in rows}
-
-    with rocksdb_provider(spark):
+    src, ckpt = tmp_path / "in", tmp_path / "ckpt"
+    v2 = transform is state.transform_invoice_state
+    with rocksdb_provider(spark) if v2 else nullcontext():
         _write_chunk(src, 0, [line("I1", 2, "1/4/2011 9:15", "10.0")])
-        r1 = run_v2()
+        r1 = _run_once(spark, src, ckpt, transform=transform)
         assert r1["I1"].Lines == 1
+        assert r1["I1"].AvgUnitPrice == pytest.approx(10.0)
         assert r1["I1"].MinUnitPrice == pytest.approx(10.0)
 
         _write_chunk(src, 1, [line("I1", 2, "1/4/2011 11:00", "30.0")])
-        r2 = run_v2()
-    assert set(r2) == {"I1"}
+        r2 = _run_once(spark, src, ckpt, transform=transform)
+    assert set(r2) == {"I1"}  # only the updated key emits
     assert r2["I1"].Lines == 2  # batch count carried over the restart
+    assert r2["I1"].AvgUnitPrice == pytest.approx((2 * 10 + 2 * 30) / 4)
+    assert r2["I1"].Time == pytest.approx(11.0)  # head of the new batch
     assert r2["I1"].MinUnitPrice == pytest.approx(10.0)  # recovered
     assert r2["I1"].MaxUnitPrice == pytest.approx(30.0)
     assert r2["I1"].NumberItems == pytest.approx(4.0)

@@ -16,7 +16,9 @@ from bigdata_invoice_stream_analysis_spark.plans.drains import (
     run_custom_state_drain,
 )
 from bigdata_invoice_stream_analysis_spark.streaming.state import (
+    transform_invoice_list_map,
     transform_invoice_state,
+    transform_invoice_timers,
 )
 
 
@@ -36,6 +38,13 @@ def _bucketed_fixture(spark):
     ).withColumn("ts", F.lit("2011-01-04 09:15:00").cast("timestamp"))
 
 
+def _hashed(updates):
+    """The value-state gates' fold-order-independent fields."""
+    return updates.select(
+        "InvoiceNo", "MinUnitPrice", "MaxUnitPrice", "NumberItems", "Lines"
+    )
+
+
 def test_ttl_drain_evicts_between_batches_and_terminates(spark):
     """With evict_after_ms=1 every micro-batch sees the previous state
     expired (consecutive batches are always >1 ms apart), so each key's
@@ -49,7 +58,7 @@ def test_ttl_drain_evicts_between_batches_and_terminates(spark):
         acc = run_custom_state_drain(
             spark,
             _bucketed_fixture(spark),
-            transform=lambda s: transform_invoice_state(s, evict_after_ms=1),
+            lambda s: _hashed(transform_invoice_state(s, evict_after_ms=1)),
             prefix="test_state_ttl",
             stop_after_files=True,
         )
@@ -72,7 +81,7 @@ def test_no_ttl_drain_still_terminates_under_available_now(spark):
         acc = run_custom_state_drain(
             spark,
             _bucketed_fixture(spark),
-            transform=transform_invoice_state,
+            lambda s: _hashed(transform_invoice_state(s)),
             prefix="test_state_nottl",
         )
     # cross-batch fold: state survived all three micro-batches
@@ -111,13 +120,10 @@ def test_timer_drain_fires_once_per_data_batch(spark):
     An already-expired timer fires within its registration batch after
     input rows and is auto-deleted, so per key n_fires == number of
     buckets containing it and the last fire snapshots complete totals."""
-    from bigdata_invoice_stream_analysis_spark.plans.drains import (
-        run_timer_state_drain,
-    )
-
     with rocksdb_provider(spark):
-        acc = run_timer_state_drain(
-            spark, _bucketed_fixture(spark), prefix="test_state_timers"
+        acc = run_custom_state_drain(
+            spark, _bucketed_fixture(spark), transform_invoice_timers,
+            prefix="test_state_timers", stop_after_files=True,
         )
     assert dict(sorted(acc.items())) == {
         "I1": (3, 6, 3),  # one fire per bucket; totals complete at last fire
@@ -130,36 +136,11 @@ def test_list_map_state_semantics(spark):
     """State-v2 ListState/MapState on the 3-bucket fixture: the list
     gets one entry per data batch IN ORDER (position-weighted sum is
     order-sensitive), the map folds per-band counts across batches."""
-    from bigdata_invoice_stream_analysis_spark.plans.drains import (
-        _stage_bucketed_stream,
-    )
-    from bigdata_invoice_stream_analysis_spark.plans.queries import _run_drain
-    from bigdata_invoice_stream_analysis_spark.scratch import fresh_checkpoint
-    from bigdata_invoice_stream_analysis_spark.streaming.state import (
-        transform_invoice_list_map,
-    )
-
-    acc = {}
-
-    def sink(bdf, _bid):
-        for r in bdf.collect():
-            acc[r["InvoiceNo"]] = (
-                r["n_batches"], r["weighted_qty"],
-                r["n_bands"], r["band_checksum"],
-            )
-
     with rocksdb_provider(spark):
-        stream = _stage_bucketed_stream(
-            spark, _bucketed_fixture(spark), "test_list_map", 3
+        acc = run_custom_state_drain(
+            spark, _bucketed_fixture(spark), transform_invoice_list_map,
+            prefix="test_list_map",
         )
-        writer = (
-            transform_invoice_list_map(stream)
-            .writeStream.outputMode("update")
-            .foreachBatch(sink)
-            .option("checkpointLocation", fresh_checkpoint("test_lm_ckpt_"))
-            .trigger(availableNow=True)
-        )
-        _run_drain(spark, writer)
     assert dict(sorted(acc.items())) == {
         # I1 qty per bucket [2, 3, 1] -> weighted 1*2 + 2*3 + 3*1 = 11;
         # bands {2,3,1} once each -> checksum 6

@@ -9,6 +9,7 @@ All queries run with trigger(availableNow=True) and block to completion.
 from __future__ import annotations
 
 import os
+from contextlib import nullcontext
 
 import pytest
 from pyspark.sql import functions as F
@@ -86,10 +87,7 @@ def test_invalid_routing(spark, stream_dir):
 
 def test_cancellation_window_counts(spark, stream_dir):
     lines = file_lines_source(spark, stream_dir, max_files_per_trigger=1)
-    counts = P.cancellation_counts(
-        lines, window="8 minutes", slide="1 minute", watermark="1 minute",
-        time_mode="event",
-    )
+    counts = P.cancellation_counts(lines, watermark="1 minute")
     batches = run_collect(spark, counts, output_mode="append")
     rows = {
         (r.window_start.strftime("%H:%M"), r.n_cancelled)
@@ -209,15 +207,29 @@ def test_invoice_updates_match_batch(spark, stream_dir):
     assert final["I1"].NumberItems == 6.0
 
 
-def test_legacy_state_semantics(spark, stream_dir, tmp_path):
-    """W2 exact semantics: per-batch emission, batch-count Lines,
-    head-of-batch Time, weighted running mean across batches."""
-    lines = file_lines_source(spark, stream_dir, max_files_per_trigger=1)
-    updates = state.apply_invoice_state(P.good_purchases(lines))
-    batches = run_collect(
-        spark, updates, output_mode="update",
-        checkpoint=str(tmp_path / "ckpt_state"),
+@pytest.mark.parametrize(
+    "transform", [state.apply_invoice_state, state.transform_invoice_state],
+    ids=["v1", "v2"],
+)
+def test_state_semantics(spark, stream_dir, tmp_path, transform):
+    """W2 exact semantics on both state APIs — applyInPandasWithState
+    (v1) and transformWithStateInPandas (v2, RocksDB-backed): per-batch
+    emission, batch-count Lines, head-of-batch Time, weighted running
+    mean across batches. v2 executes here even without the protobuf
+    package: the miniproto shim (vendor/protobuf_shim) serves the wire
+    protocol, and the JVM's Java-protobuf parser on the state server
+    side is the wire-format interop oracle."""
+    from bigdata_invoice_stream_analysis_spark.plans.drains import (
+        rocksdb_provider,
     )
+
+    v2 = transform is state.transform_invoice_state
+    with rocksdb_provider(spark) if v2 else nullcontext():
+        lines = file_lines_source(spark, stream_dir, max_files_per_trigger=1)
+        batches = run_collect(
+            spark, transform(P.good_purchases(lines)), output_mode="update",
+            checkpoint=str(tmp_path / "ckpt_state"),
+        )
     assert len(batches) >= 2, "maxFilesPerTrigger=1 must yield 2+ micro-batches"
     by_batch = {bid: {r.InvoiceNo: r for r in rows} for bid, rows in batches}
     b1, b2 = by_batch[0], by_batch[1]
@@ -280,50 +292,12 @@ def test_rate_source_shape(spark):
     assert [f.name for f in df.schema.fields] == ["key", "value", "ingest_ts"]
 
 
-def test_state_v2_semantics(spark, stream_dir, tmp_path):
-    """W2 on transformWithStateInPandas (state v2, RocksDB-backed):
-    identical per-batch emission, Lines, head-of-batch Time, and
-    weighted running mean as the applyInPandasWithState path. Skips
-    where the protobuf wire dependency is absent (state.py gates it) —
-    which no longer happens here: the miniproto shim
-    (vendor/protobuf_shim) serves the wire protocol when the real
-    package is missing, so this test EXECUTES state-v2 in this
-    container; the JVM's Java-protobuf parser on the state server side
-    is the wire-format interop oracle."""
-    from bigdata_invoice_stream_analysis_spark.plans.drains import (
-        rocksdb_provider,
-    )
-    from bigdata_invoice_stream_analysis_spark.vendor.protobuf_shim import install
-
-    install()
-    with rocksdb_provider(spark):
-        lines = file_lines_source(spark, stream_dir, max_files_per_trigger=1)
-        updates = state.transform_invoice_state(P.good_purchases(lines))
-        batches = run_collect(
-            spark, updates, output_mode="update",
-            checkpoint=str(tmp_path / "ckpt_state_v2"),
-        )
-    assert len(batches) >= 2
-    by_batch = {bid: {r.InvoiceNo: r for r in rows} for bid, rows in batches}
-    b1, b2 = by_batch[0], by_batch[1]
-    assert set(b1) == {"I1", "I2"}
-    assert b1["I1"].Lines == 1
-    assert b1["I1"].AvgUnitPrice == pytest.approx((2 * 10 + 1 * 30) / 3)
-    assert b1["I1"].Time == pytest.approx(9 + 15 / 60)
-    assert set(b2) == {"I1", "I5"}
-    assert b2["I1"].Lines == 2
-    assert b2["I1"].AvgUnitPrice == pytest.approx(110.0 / 6)
-    assert b2["I1"].MinUnitPrice == 10.0
-    assert b2["I1"].MaxUnitPrice == 30.0
-    assert b2["I1"].NumberItems == 6.0
-
-
 def test_state_v2_shim_installs_and_serves_pb2():
     """The environment gate is gone: vendor/protobuf_shim always makes
     google.protobuf importable (real install wins; otherwise the
     miniproto shim), and the generated StateMessage_pb2 module loads
     and round-trips the exact request shapes the state-v2 client
-    builds. The full JVM interop is test_state_v2_semantics."""
+    builds. The full JVM interop is test_state_semantics[v2]."""
     from bigdata_invoice_stream_analysis_spark.vendor.protobuf_shim import install
 
     mode = install()
@@ -449,10 +423,7 @@ def test_late_data_dropped_after_watermark(spark, tmp_path):
         # single-dir form of this test flaked when the "late" chunk
         # happened to be listed first, before any watermark existed.)
         lines = file_lines_source(spark, str(d), max_files_per_trigger=1)
-        counts = P.cancellation_counts(
-            lines, window="8 minutes", slide="1 minute", watermark="1 minute",
-            time_mode="event",
-        )
+        counts = P.cancellation_counts(lines, watermark="1 minute")
         batches.extend(run_collect(
             spark, counts, output_mode="append", checkpoint=ckpt
         ))
